@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from datapipeline_ops_spark.core.registry import query
+from datapipeline_ops_spark.operators import dedup as dedup_ops
 from datapipeline_ops_spark.operators.dedup import CC_SMALL_GRAPH_EDGES
 from datapipeline_ops_spark.tables import load_table, local_frame
 
@@ -285,19 +286,13 @@ def triangle_copurchase_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     edges = copurchase_edges(li).persist()
     try:
-        # adaptive strategy (the CC_SMALL_GRAPH_EDGES precedent): at or
-        # under the cap the support-filtered edge list collects and the
-        # wedge/triangle census runs driver-local — the distributed form
+        # adaptive strategy: at or under the cap the wedge/triangle census
+        # runs driver-local on the collected edges — the distributed form
         # pays 3 aggregation jobs plus a two-join cubic stage whose fixed
         # cost dominates on a bounded graph. Above the cap the distributed
-        # node-iterator census below runs unchanged on the persisted edges.
-        # Probe + collect are ONE bounded Arrow job (r15, the r14 ADVICE
-        # item): CollectLimit takes incrementally (no GlobalLimit shuffle,
-        # no second probe job) and the Arrow batch caps driver memory at
-        # ~16 B/edge — never cap+1 Python Row objects (a count-first probe
-        # measured +0.3-0.5 s per query on the under-cap path).
-        head = edges.limit(CC_SMALL_GRAPH_EDGES + 1).toArrow()
-        if head.num_rows <= CC_SMALL_GRAPH_EDGES:
+        # node-iterator census below runs on the persisted edges.
+        head = dedup_ops.collect_if_small(edges, CC_SMALL_GRAPH_EDGES)
+        if head is not None:
             return _triangle_local(
                 spark,
                 list(zip(head.column("pa").to_pylist(),
@@ -445,17 +440,13 @@ def bfs_reach_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        # adaptive strategy (the CC_SMALL_GRAPH_EDGES precedent): at or
-        # under the cap the symmetric edge list collects and the bounded
-        # BFS runs driver-local — the distributed loop's per-hop eager
-        # checkpoint jobs' fixed cost dominates on a bounded frontier.
-        # Above the cap the per-hop frontier joins below run unchanged on
-        # the persisted edges. Probe + collect are ONE bounded Arrow job
-        # (r15, the r14 ADVICE item): CollectLimit takes incrementally and
-        # the Arrow batch caps driver memory at ~16 B/edge — never cap+1
-        # Python Row objects.
-        head = edges.limit(CC_SMALL_GRAPH_EDGES + 1).toArrow()
-        if head.num_rows <= CC_SMALL_GRAPH_EDGES:
+        # adaptive strategy: at or under the cap the bounded BFS runs
+        # driver-local on the collected symmetric edges — the distributed
+        # loop's per-hop eager checkpoint jobs are pure fixed cost on a
+        # bounded frontier. Above the cap the per-hop frontier joins below
+        # run on the persisted edges.
+        head = dedup_ops.collect_if_small(edges, CC_SMALL_GRAPH_EDGES)
+        if head is not None:
             return _bfs_local(
                 spark,
                 list(zip(head.column("src").to_pylist(),

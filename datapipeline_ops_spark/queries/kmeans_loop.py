@@ -35,17 +35,16 @@ Design (Lloyd, squared-L2):
   centroid (dict carry-over, mirroring the oracle's left-join coalesce)
   in BOTH engines.
 - Adaptive strategy (r15, the CC_SMALL_GRAPH_EDGES / BPE-cap precedent):
-  at or under ``_KM_DRIVER_ROWS_CAP`` clean corpus vectors — probe and
-  collect are one bounded Arrow job — the whole loop runs driver-local
-  on the
-  Arrow-collected matrix with bit-identical arithmetic (numpy
-  column-order folds == the Spark/DuckDB left-to-right dim folds; argmin
-  first-minimum == the cid tie-break; a property-pinned Spark-round
-  replica for the 6-dp trajectory). The distributed loop above runs
-  unchanged past the cap; equivalence is pinned by
-  tests/test_round15_opt.py (cap forced to 0) and the cap is the measured
-  crossover against the distributed form's fixed cost, not a bench
-  constant.
+  at or under ``_KM_DRIVER_ROWS_CAP`` clean corpus vectors (one
+  ``operators.dedup.collect_if_small`` probe) the whole loop runs
+  driver-local on the Arrow-collected matrix with bit-identical
+  arithmetic (numpy column-order folds == the Spark/DuckDB left-to-right
+  dim folds; argmin first-minimum == the cid tie-break; a property-pinned
+  Spark-round replica for the 6-dp trajectory). The distributed loop
+  above runs unchanged past the cap; equivalence is pinned by
+  tests/test_adaptive_paths.py (probe forced to None) and the cap is the
+  measured crossover against the distributed form's fixed cost, not a
+  bench constant.
 - Centroid components round to 6 dp (+0.0) after every update so both
   engines walk the identical trajectory (the GD-loop precedent); argmin
   ties break on cluster_id over bit-identical distances (same IEEE fold
@@ -89,7 +88,8 @@ _KM_ITERS = 5
 def _km_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return persist_barrier(
-        e.select("vec_id", as_double(F.col("embedding")).alias("vec")), "km_v"
+        e.select("vec_id", as_double(F.col("embedding")).alias("vec")),
+        f"km_v:{sf_dir}",
     )
 
 
@@ -154,9 +154,9 @@ def _km_memo_clear() -> None:
 # measured crossover, not a bench constant: the numpy column-fold loop
 # walks 6 stages over 100k x 64 doubles in ~0.8 s (51 MB collected), while
 # the distributed loop's fixed cost (7 sequential jobs + per-stage literal
-# spines) is ~3 s on local[32] regardless of data size. Probing is
-# collect-free (a plain count on the persisted projection), so the
-# above-cap path never ships rows to the driver (the r14 ADVICE item).
+# spines) is ~3 s on local[32] regardless of data size. The probe is
+# operators.dedup.collect_if_small: even above the cap it ships cap+1 rows
+# (~51 MB of Arrow) to the driver before the distributed loop runs.
 _KM_DRIVER_ROWS_CAP = 100_000
 
 _KM_STATS_SCHEMA = "iter int, inertia double, n_active long, n_moved long"
@@ -406,19 +406,16 @@ def _km_run(spark: SparkSession, sf_dir: str):
     Arrow-collected matrix; above it the fused distributed loop runs and
     the rollup slot is None (the applies then run their corpus-scale
     Spark passes)."""
-    from datapipeline_ops_spark.operators.dedup import register_clear_hook
+    from datapipeline_ops_spark.operators import dedup as dedup_ops
 
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _KM_MEMO.get(key)
     if hit is not None:
         return hit
-    register_clear_hook(_km_memo_clear)
+    dedup_ops.register_clear_hook(_km_memo_clear)
     v = _km_v(spark, sf_dir)
-    # probe + collect are ONE bounded Arrow job (the r14 ADVICE item):
-    # CollectLimit takes incrementally, and the batch bounds driver memory
-    # at <= (cap+1) x dim doubles columnar — never Python Row objects
-    tbl = v.limit(_KM_DRIVER_ROWS_CAP + 1).toArrow()
-    if tbl.num_rows <= _KM_DRIVER_ROWS_CAP and _km_arrow_clean(tbl):
+    tbl = dedup_ops.collect_if_small(v, _KM_DRIVER_ROWS_CAP)
+    if tbl is not None and _km_arrow_clean(tbl):
         ids = tbl.column("vec_id").to_pylist()
         if tbl.num_rows:
             flat = (

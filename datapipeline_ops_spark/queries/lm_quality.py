@@ -1406,7 +1406,7 @@ def bpe_train_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed loop runs: pair counts partial-aggregate over the
     persisted symbol table, the 1-row merge rule broadcasts back (left
     BNLJ so an empty rule is a no-op), and each stage's rewritten vocab
-    localCheckpoints (the CC-loop precedent, operators/dedup.py:311) so
+    localCheckpoints (the _cc_distributed precedent, operators/dedup.py) so
     depth-k training re-reads cached symbols, never the corpus — AND the
     logical plan stays flat: without the lineage cut, stage i references
     stage i-1 twice (through the rule and through the rewrite) and the
@@ -1443,7 +1443,7 @@ def _bpe_memo_clear() -> None:
 # loop wall was ~9 s at EVERY scale factor — pure per-stage overhead on a
 # tiny frame. Above the cap the checkpoint-flat distributed loop runs
 # unchanged; both paths produce identical rows (integer/string arithmetic
-# only — pinned by tests/test_round14_opt.py).
+# only — pinned by tests/test_adaptive_paths.py).
 _BPE_DRIVER_VOCAB_CAP = 500_000
 
 _BPE_STATS_SCHEMA = (
@@ -1514,13 +1514,13 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
     with columns token/n/nb/s/na, per-merge stats frames). Shared by
     bpe_train_loop and bpe_vocab_apply (memoized per session+dir — the
     apply query reuses the trained vocabulary instead of retraining)."""
-    from datapipeline_ops_spark.operators.dedup import register_clear_hook
+    from datapipeline_ops_spark.operators import dedup as dedup_ops
 
     key = (spark.sparkContext.applicationId, sf_dir)
     hit = _BPE_LOOP_MEMO.get(key)
     if hit is not None:
         return hit
-    register_clear_hook(_bpe_memo_clear)
+    dedup_ops.register_clear_hook(_bpe_memo_clear)
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(
@@ -1539,15 +1539,12 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
         )
     )
     v = vocab.localCheckpoint(eager=True)
-    # adaptive strategy: probe + collect are ONE bounded Arrow job over
-    # the already-checkpointed frame (r15, the r14 ADVICE item) —
-    # CollectLimit takes incrementally and the Arrow batch bounds driver
-    # memory by the cap's columnar bytes, never cap+1 Python Row objects.
-    # Under the cap the merge loop runs driver-local; above it the
-    # distributed checkpoint-flat loop below runs unchanged (the corpus
-    # pass is never re-derived either way).
-    head = v.limit(_BPE_DRIVER_VOCAB_CAP + 1).toArrow()
-    if head.num_rows <= _BPE_DRIVER_VOCAB_CAP:
+    # adaptive strategy over the already-checkpointed frame: under the cap
+    # the merge loop runs driver-local; above it the distributed
+    # checkpoint-flat loop below runs (the corpus pass is never re-derived
+    # either way).
+    head = dedup_ops.collect_if_small(v, _BPE_DRIVER_VOCAB_CAP)
+    if head is not None:
         result = _bpe_driver_loop(
             spark,
             list(zip(head.column("token").to_pylist(),

@@ -284,26 +284,6 @@ def test_connected_components_raises_on_budget_exhaustion(spark):
         connected_components(pairs, max_iters=2, small_graph_edges=0)
 
 
-def test_connected_components_small_and_distributed_paths_agree(spark):
-    """The adaptive driver-local union-find and the distributed pointer-
-    jumping rounds must label identically (label = component min id)."""
-    import hashlib
-
-    from datapipeline_ops_spark.operators.dedup import connected_components
-
-    edges = []
-    for i in range(150):
-        h = int(hashlib.md5(f"cc2:{i}".encode()).hexdigest()[:8], 16)
-        edges.append((h % 80, (h >> 8) % 80))
-    pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    small = {r.node: r.label for r in connected_components(pairs).collect()}
-    dist = {
-        r.node: r.label
-        for r in connected_components(pairs, small_graph_edges=0).collect()
-    }
-    assert small == dist
-
-
 def test_connected_components_empty_input(spark):
     from datapipeline_ops_spark.operators.dedup import connected_components
 

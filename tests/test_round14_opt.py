@@ -1,71 +1,8 @@
-"""Round-14 optimization tests: the adaptive strategies introduced by the
-optimization round must be invisible at the value level — the cheap path
-and the general path produce identical rows."""
+"""Round-14 optimization tests: the fused single-pass covariance must stay
+value-exact (the adaptive-path equivalence tests live in
+tests/test_adaptive_paths.py)."""
 
 import math
-
-import pyspark.sql.functions as F
-
-from datapipeline_ops_spark.queries import lm_quality
-
-
-def _rows_key(df):
-    cols = sorted(df.columns)
-    out = []
-    for r in df.collect():
-        out.append(tuple((c, r[c]) for c in cols))
-    return sorted(out, key=repr)
-
-
-def test_bpe_driver_loop_matches_distributed(spark, sf_dir, monkeypatch):
-    """The cap-gated driver-local merge loop must walk the exact trajectory
-    of the distributed checkpoint-flat loop: same merge rules (argmax +
-    tie-break), same per-merge integer stats, same final vocabulary."""
-    from datapipeline_ops_spark.operators.dedup import clear_barriers
-
-    # driver path (vocab far below the cap on the test corpus)
-    clear_barriers()
-    lm_quality._bpe_memo_clear()
-    v_drv, rows_drv = lm_quality._bpe_run_loop(spark, sf_dir)
-    stats_drv = rows_drv[0]
-    for r in rows_drv[1:]:
-        stats_drv = stats_drv.unionByName(r)
-    stats_drv_rows = _rows_key(stats_drv)
-    vocab_drv_rows = _rows_key(v_drv.select("token", "n", "nb", "s", "na"))
-
-    # distributed path, forced by a zero cap
-    clear_barriers()
-    lm_quality._bpe_memo_clear()
-    monkeypatch.setattr(lm_quality, "_BPE_DRIVER_VOCAB_CAP", 0)
-    v_dist, rows_dist = lm_quality._bpe_run_loop(spark, sf_dir)
-    stats_dist = rows_dist[0]
-    for r in rows_dist[1:]:
-        stats_dist = stats_dist.unionByName(r)
-    stats_dist_rows = _rows_key(stats_dist)
-    vocab_dist_rows = _rows_key(v_dist.select("token", "n", "nb", "s", "na"))
-    lm_quality._bpe_memo_clear()
-    clear_barriers()
-
-    assert stats_drv_rows == stats_dist_rows
-    assert vocab_drv_rows == vocab_dist_rows
-    # sanity: the loop actually merged something on this corpus
-    assert len(stats_drv_rows) == lm_quality._BPE_LOOP_MERGES
-
-
-def test_graph_driver_paths_match_distributed(spark, sf_dir, monkeypatch):
-    """The cap-gated driver-local triangle census and bounded BFS must
-    produce exactly the distributed forms' rows."""
-    from datapipeline_ops_spark.queries import graph_queries as gq
-
-    tri_local = _rows_key(gq.triangle_copurchase_stats(spark, sf_dir))
-    bfs_local = _rows_key(gq.bfs_reach_3hop(spark, sf_dir))
-    monkeypatch.setattr(gq, "CC_SMALL_GRAPH_EDGES", 0)
-    tri_dist = _rows_key(gq.triangle_copurchase_stats(spark, sf_dir))
-    bfs_dist = _rows_key(gq.bfs_reach_3hop(spark, sf_dir))
-    assert tri_local == tri_dist
-    assert bfs_local == bfs_dist
-    assert len(tri_local) == 1
-    assert len(bfs_local) >= 1
 
 
 def test_pca_covariance_single_pass_matches_numpy(spark, sf_dir):

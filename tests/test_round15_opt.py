@@ -1,49 +1,12 @@
-"""Round-15 optimization tests: the kmeans adaptive strategy (driver-local
-Lloyd under the row cap, fused means+stats distributed loop above it) must
-be invisible at the value level, and the driver-side Spark-round replica
-must be exact."""
+"""Round-15 optimization tests: the driver-side Spark-round replica and the
+driver-local Lloyd loop's edge cases must be exact (the driver vs
+distributed equivalence tests live in tests/test_adaptive_paths.py)."""
 
 import random
 
 import pyspark.sql.functions as F
 
 from datapipeline_ops_spark.queries import kmeans_loop as km
-
-
-def _rows_key(df):
-    cols = sorted(df.columns)
-    out = []
-    for r in df.collect():
-        out.append(tuple((c, r[c]) for c in cols))
-    return sorted(out, key=repr)
-
-
-def test_kmeans_driver_path_matches_distributed(spark, sf_dir, monkeypatch):
-    """The cap-gated driver-local Lloyd loop (numpy column-order folds +
-    Spark-round replica) must produce exactly the fused distributed loop's
-    rows for all three kmeans queries — stats trajectory, in-lineage
-    rollup, and the artifact apply."""
-    from datapipeline_ops_spark.operators.dedup import clear_barriers
-    from datapipeline_ops_spark.queries import QUERIES
-
-    names = ["kmeans_train_loop", "kmeans_assign_apply", "kmeans_artifact_apply"]
-
-    clear_barriers()
-    km._km_memo_clear()
-    drv = {n: _rows_key(QUERIES[n].fn(spark, sf_dir)) for n in names}
-
-    clear_barriers()
-    km._km_memo_clear()
-    monkeypatch.setattr(km, "_KM_DRIVER_ROWS_CAP", 0)
-    dist = {n: _rows_key(QUERIES[n].fn(spark, sf_dir)) for n in names}
-    km._km_memo_clear()
-    clear_barriers()
-
-    for n in names:
-        assert drv[n] == dist[n], n
-    # sanity: the loop actually trained (full trajectory, live clusters)
-    assert len(drv["kmeans_train_loop"]) == km._KM_ITERS + 1
-    assert len(drv["kmeans_assign_apply"]) >= 1
 
 
 def test_km_r6_matches_spark_round(spark):
@@ -99,9 +62,8 @@ def test_km_driver_lloyd_edge_cases(spark):
 
 
 # ---------------------------------------------------------------------------
-# r14 ADVICE edge cases: the adaptive strategies' unhappy branches must also
-# be path-invisible — a vocab that drains before the merge budget, empty and
-# one-edge graphs, and an SGD batch key with zero rows.
+# r14 ADVICE edge case: an SGD batch key with zero rows (the drained-vocab
+# and empty/one-edge graph cases are in tests/test_adaptive_paths.py).
 # ---------------------------------------------------------------------------
 
 
@@ -122,78 +84,6 @@ def _write_docs(tmp_path, rows):
         ],
         [(i, t, "en", s, len(t)) for i, t, s in rows],
     )
-
-
-def test_bpe_drained_vocab_driver_matches_distributed(
-    spark, tmp_path_factory, monkeypatch
-):
-    """A corpus whose vocabulary drains to single symbols before the merge
-    budget: merges past the drain publish ZERO rows (empty argmax frame) in
-    the distributed loop, and the driver loop must mirror that exactly."""
-    from datapipeline_ops_spark.operators.dedup import clear_barriers
-    from datapipeline_ops_spark.queries import lm_quality
-
-    tmp_path = tmp_path_factory.mktemp("bpe_drain")
-    _write_docs(tmp_path, [(1, "ab ab", "web"), (2, "ab", "books")])
-
-    def run():
-        clear_barriers()
-        lm_quality._bpe_memo_clear()
-        v, rows = lm_quality._bpe_run_loop(spark, str(tmp_path))
-        stats = rows[0]
-        for r in rows[1:]:
-            stats = stats.unionByName(r)
-        return (
-            _rows_key(stats),
-            _rows_key(v.select("token", "n", "nb", "s", "na")),
-        )
-
-    stats_drv, vocab_drv = run()
-    monkeypatch.setattr(lm_quality, "_BPE_DRIVER_VOCAB_CAP", 0)
-    stats_dist, vocab_dist = run()
-    lm_quality._bpe_memo_clear()
-    clear_barriers()
-
-    assert stats_drv == stats_dist
-    assert vocab_drv == vocab_dist
-    # the drain actually happened: fewer published rows than the budget
-    assert len(stats_drv) < lm_quality._BPE_LOOP_MERGES
-
-
-def test_graph_edge_cases_driver_matches_distributed(
-    spark, tmp_path_factory, monkeypatch
-):
-    """Empty co-purchase graph (no pair reaches the support threshold) and
-    a one-edge graph: the driver-local census/walk and the distributed
-    forms must emit identical rows. The distributed path is forced with a
-    NEGATIVE cap (a zero cap still routes an empty edge list driver-side)."""
-    import pyarrow as pa
-
-    from datapipeline_ops_spark.queries import graph_queries as gq
-    from test_fuzz_oracle_parity import _copy_rows
-
-    cases = {
-        # every order holds one part: zero pairs, empty edge set
-        "empty": [(1, 10), (2, 11), (3, 12)],
-        # parts (1, 2) co-purchased in two orders: exactly one edge
-        "one_edge": [(1, 1), (1, 2), (2, 1), (2, 2), (3, 7)],
-    }
-    for label, li_rows in cases.items():
-        tmp_path = tmp_path_factory.mktemp(f"graph_{label}")
-        _copy_rows(
-            tmp_path,
-            "lineitem",
-            [("l_orderkey", pa.int64()), ("l_partkey", pa.int64())],
-            li_rows,
-        )
-        tri_drv = _rows_key(gq.triangle_copurchase_stats(spark, str(tmp_path)))
-        bfs_drv = _rows_key(gq.bfs_reach_3hop(spark, str(tmp_path)))
-        monkeypatch.setattr(gq, "CC_SMALL_GRAPH_EDGES", -1)
-        tri_dist = _rows_key(gq.triangle_copurchase_stats(spark, str(tmp_path)))
-        bfs_dist = _rows_key(gq.bfs_reach_3hop(spark, str(tmp_path)))
-        monkeypatch.setattr(gq, "CC_SMALL_GRAPH_EDGES", 1_000_000)
-        assert tri_drv == tri_dist, (label, tri_drv, tri_dist)
-        assert bfs_drv == bfs_dist, (label, bfs_drv, bfs_dist)
 
 
 def test_sgd_empty_batch_matches_oracle(spark, tmp_path_factory):
