@@ -24,6 +24,8 @@ signatures, buckets and pairs.
 
 from __future__ import annotations
 
+import functools
+
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -104,34 +106,48 @@ def persist_barrier(df: DataFrame, site: str) -> DataFrame:
     return out
 
 
-_CLEAR_HOOKS: list = []
+# Every session_memo's dict, so clear_barriers() can empty them all.
+_MEMOS: list[dict] = []
 
 
-def register_clear_hook(fn) -> None:
-    """Register a callable invoked by :func:`clear_barriers` — for module
-    caches that hold materialized frames outside ``_BARRIERS`` (e.g. the
-    memoized BPE vocabulary, which is localCheckpoint-backed and therefore
-    can't dedupe via ``sameSemantics``)."""
-    if fn not in _CLEAR_HOOKS:
-        _CLEAR_HOOKS.append(fn)
+def session_memo(fn):
+    """Memoize trained driver state ``fn(spark, sf_dir)`` per
+    ``(applicationId, sf_dir)``; ``fn.cache_clear()`` empties this memo only.
+
+    For state that can't dedupe through ``sameSemantics``: driver-held
+    weights and centroids, or fresh localCheckpoint frames. A memoized
+    result may hold handles to barrier frames and checkpoints, so its
+    lifetime is the barriers': :func:`clear_barriers` empties every memo
+    together with ``_BARRIERS``. A new session has a new applicationId and
+    never sees stale handles."""
+    memo: dict = {}
+    _MEMOS.append(memo)
+
+    @functools.wraps(fn)
+    def memoized(spark, sf_dir: str):
+        key = (spark.sparkContext.applicationId, sf_dir)
+        if key not in memo:
+            memo[key] = fn(spark, sf_dir)
+        return memo[key]
+
+    memoized.cache_clear = memo.clear
+    return memoized
 
 
 def clear_barriers() -> None:
-    """Unpersist every live barrier frame (bench uses this between repeat
-    runs so each measurement is cold; safer than ``catalog.clearCache()``,
-    which would drop the blocks while leaving ``_BARRIERS`` pointing at
-    silently-uncached frames)."""
+    """Unpersist every live barrier frame and empty every session memo
+    (bench uses this between repeat runs so each measurement is cold;
+    safer than ``catalog.clearCache()``, which would drop the blocks while
+    leaving ``_BARRIERS`` and the memos pointing at silently-uncached
+    frames)."""
     for df in _BARRIERS.values():
         try:
             df.unpersist()
         except Exception:
             pass
     _BARRIERS.clear()
-    for fn in _CLEAR_HOOKS:
-        try:
-            fn()
-        except Exception:
-            pass
+    for memo in _MEMOS:
+        memo.clear()
 
 
 def with_shingle_hashes(df: DataFrame, key_col: str, text_col: str = "text") -> DataFrame:

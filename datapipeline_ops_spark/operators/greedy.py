@@ -23,7 +23,6 @@ import hashlib
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 SIM_T = 0.95  # identity-match threshold (analog: face-embedding cosine >= t)
 OV_T = 0.98  # overlap-drop threshold   (analog: box IoU > 0.2)
@@ -85,20 +84,4 @@ def greedy_keep(df: DataFrame, group_col: str, order_col: str) -> DataFrame:
         df.select(group_col, order_col)
         .groupBy(group_col)
         .applyInPandas(scan, schema=out_schema)
-    )
-
-
-def greedy_keep_relational_approx(df: DataFrame, group_col: str, order_col: str) -> DataFrame:
-    """Order-free approximation kept for comparison benchmarks only — NOT
-    the reference semantics (documented divergence, SURVEY.md §2.2): bucket
-    by quantized identity coordinate, keep max-quality per bucket."""
-    pos = (F.conv(F.substring(F.md5(F.concat(F.lit("11:"), F.col(order_col).cast("string"))), 1, 15), 16, 10).cast("long") % 1000000) / 1000000.0
-    q = (F.conv(F.substring(F.md5(F.concat(F.lit("12:"), F.col(order_col).cast("string"))), 1, 15), 16, 10).cast("long") % 1000000) / 1000000.0
-    return (
-        df.select(group_col, order_col)
-        .withColumn("bucket", F.floor(pos * 20))
-        .withColumn("q", q)
-        .groupBy(group_col, "bucket")
-        .agg(F.max_by(order_col, "q").alias(order_col))
-        .select(group_col, order_col)
     )

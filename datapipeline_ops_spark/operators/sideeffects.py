@@ -14,12 +14,11 @@ from __future__ import annotations
 
 import random
 import time
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 
-Action = Callable[[Row], None]
 Sleeper = Callable[[float], None]
 
 
@@ -45,24 +44,6 @@ class RetryPolicy:
                 if attempt + 1 < self.max_attempts:
                     self.sleeper(2**attempt + self.jitter())
         return 0, err
-
-
-def run_per_partition(
-    df: DataFrame,
-    make_action: Callable[[], Action],
-    policy: RetryPolicy | None = None,
-) -> None:
-    """Execute an action per row with per-row retry, one action instance per
-    partition (client/process setup happens once per partition, mirroring
-    the reference's one-ffmpeg-wrapper-per-worker shape)."""
-    policy = policy or RetryPolicy()
-
-    def run(rows: Iterable[Row]) -> None:
-        action = make_action()
-        for row in rows:
-            policy.run(lambda: action(row))
-
-    df.foreachPartition(run)
 
 
 def run_with_status(

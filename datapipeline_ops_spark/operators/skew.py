@@ -12,7 +12,7 @@ unsalted oracle.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 DEFAULT_SALTS = 8
 
@@ -41,9 +41,3 @@ def salted_agg(
     return p1.groupBy(*key_cols).agg(
         *[combine[fn](out).alias(out) for out, (src, fn) in aggs.items()]
     )
-
-
-def top_hot_keys(df: DataFrame, key: Column, k: int = 10) -> DataFrame:
-    """Diagnostic: the k heaviest keys and their row counts — what you run
-    first when a stage straggles."""
-    return df.groupBy(key.alias("key")).count().orderBy(F.desc("count")).limit(k)

@@ -77,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from datapipeline_ops_spark.core.registry import query
 from datapipeline_ops_spark.functions.vectors import as_double, sqdist, sql_sqdist
-from datapipeline_ops_spark.operators.dedup import persist_barrier
+from datapipeline_ops_spark.operators.dedup import persist_barrier, session_memo
 from datapipeline_ops_spark.queries.similarity import _V_CTE, EMB_DIM, IVF_CENTROIDS
 from datapipeline_ops_spark.tables import load_table, local_frame
 
@@ -135,18 +135,6 @@ def _km_best(vec_col, cents_col):
     )
 
 
-# Session-scoped memo for the trained Lloyd state (the _bpe_run_loop
-# precedent): the trained state is plain Python (centroid dicts + collected
-# stage stats), which can't ride sameSemantics, so cross-query reuse needs
-# an explicit memo. Keyed by (applicationId, sf_dir); cleared by
-# clear_barriers() so bench repeats stay cold.
-_KM_MEMO: dict = {}
-
-
-def _km_memo_clear() -> None:
-    _KM_MEMO.clear()
-
-
 # Adaptive-strategy cap (r15 optimization, the CC_SMALL_GRAPH_EDGES /
 # _BPE_DRIVER_VOCAB_CAP precedent): at or under this many corpus vectors
 # the Lloyd loop runs driver-local on the collected n x dim matrix; above
@@ -169,7 +157,7 @@ def _km_r6(x):
     """Driver-side replica of Spark's ``round(x, 6) + 0.0`` on DOUBLE:
     shortest-decimal string (repr == Java Double.toString), HALF_UP
     quantize at 6 dp, back to double, -0.0 normalized. Property-pinned
-    against the Spark expression in tests/test_round15_opt.py."""
+    against the Spark expression in tests/test_training_loops.py."""
     from decimal import ROUND_HALF_UP, Context, Decimal
 
     if x is None:
@@ -396,6 +384,7 @@ def _km_dist_loop(spark: SparkSession, v: DataFrame):
     return cents, stage_vals
 
 
+@session_memo
 def _km_run(spark: SparkSession, sf_dir: str):
     """Train the {_KM_ITERS}-update Lloyd loop; returns (centroid dicts
     c_0..c_k, per-stage stats tuples, final-assignment rollup tuples or
@@ -408,11 +397,6 @@ def _km_run(spark: SparkSession, sf_dir: str):
     Spark passes)."""
     from datapipeline_ops_spark.operators import dedup as dedup_ops
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KM_MEMO.get(key)
-    if hit is not None:
-        return hit
-    dedup_ops.register_clear_hook(_km_memo_clear)
     v = _km_v(spark, sf_dir)
     tbl = dedup_ops.collect_if_small(v, _KM_DRIVER_ROWS_CAP)
     if tbl is not None and _km_arrow_clean(tbl):
@@ -426,12 +410,13 @@ def _km_run(spark: SparkSession, sf_dir: str):
             rows = [(ids[i], mat[i]) for i in range(tbl.num_rows)]
         else:
             rows = []
-        result = _km_driver_lloyd(rows)
-    else:
-        cents, stage_vals = _km_dist_loop(spark, v)
-        result = (cents, stage_vals, None)
-    _KM_MEMO[key] = result
-    return result
+        return _km_driver_lloyd(rows)
+    cents, stage_vals = _km_dist_loop(spark, v)
+    return cents, stage_vals, None
+
+
+# tools/check_plans.py clears the memo under this name to force a re-train
+_km_memo_clear = _km_run.cache_clear
 
 
 def _km_ctes() -> tuple[list[str], list[str]]:

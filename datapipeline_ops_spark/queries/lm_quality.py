@@ -18,11 +18,12 @@ rounds to 6 significant figures), division always DOUBLE/DOUBLE.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from datapipeline_ops_spark.core.registry import query
 from datapipeline_ops_spark.functions.hashing import hash64, sql_hash64
 from datapipeline_ops_spark.functions.text import tokens
+from datapipeline_ops_spark.operators.dedup import session_memo
 from datapipeline_ops_spark.tables import load_table, local_frame
 
 # ---------------------------------------------------------------------------
@@ -979,6 +980,55 @@ def _qct_feats_sql() -> str:
     )"""
 
 
+def _qct_feature_cols() -> tuple[list[Column], Column]:
+    """The Spark side of the _qct_feats_sql contract over documents.text:
+    ([x1, x2, x3, x4, y], fixed_pass), built with the oracle's casts and
+    association order. Shared by the GD unroll and mini-batch SGD."""
+    t = tokens(F.col("text"))
+    words = tokens(F.trim(F.col("text")))
+    n_nonspace = F.length(F.regexp_replace("text", r"\s", ""))
+    mean_len = F.aggregate(t, F.lit(0), lambda a, x: a + F.length(x)).cast(
+        "double"
+    ) / F.size(t).cast("double")
+    stop = F.size(F.filter(t, lambda x: (x == "the") | (x == "a"))).cast(
+        "double"
+    ) / F.size(t).cast("double")
+    ttr = F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
+    mwl = n_nonspace.cast("double") / F.size(words).cast("double")
+    alpha = F.size(F.expr(r"filter(split(trim(text), '\\s+'), w -> w rlike '[a-zA-Z]')")).cast(
+        "double"
+    ) / F.size(words).cast("double")
+    fixed_logit = (
+        F.lit(_QC_B)
+        + F.lit(_QC_W_NTOK) * F.size(t)
+        + F.lit(_QC_W_MEANLEN) * mean_len
+        + F.lit(_QC_W_STOP) * stop
+        + F.lit(_QC_W_TTR) * ttr
+    )
+    cols = [
+        (
+            F.least(F.size(t), F.lit(100)).cast("double")
+            / F.lit(100).cast("double")
+            - F.lit(0.5)
+        ).alias("x1"),
+        (
+            F.least(mean_len, F.lit(10).cast("double")) / F.lit(10).cast("double")
+            - F.lit(0.5)
+        ).alias("x2"),
+        (stop - F.lit(0.5)).alias("x3"),
+        (ttr - F.lit(0.5)).alias("x4"),
+        F.when(
+            (F.size(words) >= 50)
+            & (F.size(words) <= 100_000)
+            & (mwl >= F.lit(3).cast("double"))
+            & (mwl <= F.lit(10).cast("double"))
+            & (alpha > F.lit(0.8)),
+            F.lit(1.0),
+        ).otherwise(F.lit(0.0)).alias("y"),
+    ]
+    return cols, (fixed_logit >= F.lit(0.0)).alias("fixed_pass")
+
+
 # shared-arithmetic logit/sigmoid fragments at the current stage weights —
 # used by both the training oracle and the apply (trained_gate_impact) oracle
 _QCT_Z = "(s.b + s.w1 * f.x1 + s.w2 * f.x2 + s.w3 * f.x3 + s.w4 * f.x4)"
@@ -1066,26 +1116,6 @@ def train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stage_rows
 
 
-# Session-scoped memo for the trained GD trajectory (the _km_run
-# precedent): stage weights are driver-held floats embedded as literals,
-# so each stage is exactly ONE partial-aggregated job over the persisted
-# feature table — the frame-chained form paid per-stage persists,
-# broadcast builds and Catalyst re-analysis that dominated the wall at
-# every scale factor. Keyed by (applicationId, sf_dir); cleared by
-# clear_barriers() so bench repeats stay cold.
-_QCT_MEMO: dict = {}
-# INVALIDATION CONTRACT (r14 ADVICE): _QCT_MEMO holds handles to
-# persist_barrier-backed frames, so it must only ever be invalidated
-# through clear_barriers() (which runs the registered hook below AND
-# unpersists the barrier blocks together). Unpersisting a "qct_*" barrier
-# directly — or catalog.clearCache() — would leave the memo returning
-# handles to silently-uncached frames (the _BARRIERS docstring's warning).
-
-
-def _qct_memo_clear() -> None:
-    _QCT_MEMO.clear()
-
-
 def _dlit(x):
     """Double literal that preserves NULL (empty-corpus gradients stay
     NULL through the trajectory, mirroring the oracle's CASE-less
@@ -1093,6 +1123,7 @@ def _dlit(x):
     return F.lit(float(x)) if x is not None else F.lit(None).cast("double")
 
 
+@session_memo
 def _qct_run(spark: SparkSession, sf_dir: str):
     """Build the feature table and run the {_QCT_ITERS}-update GD unroll;
     return (persisted feats, per-stage summary frames, final weight frame).
@@ -1101,60 +1132,12 @@ def _qct_run(spark: SparkSession, sf_dir: str):
     the kmeans-loop precedent) and every update ROUNDS IN SPARK before
     collection, so the trajectory is the exact one the broadcast-frame
     form walked; collected doubles re-embed as literals losslessly."""
-    from datapipeline_ops_spark.operators.dedup import persist_barrier, register_clear_hook
+    from datapipeline_ops_spark.operators.dedup import persist_barrier
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QCT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    register_clear_hook(_qct_memo_clear)
     d = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    words = tokens(F.trim(F.col("text")))
-    n_nonspace = F.length(F.regexp_replace("text", r"\s", ""))
-    mean_len = F.aggregate(t, F.lit(0), lambda a, x: a + F.length(x)).cast(
-        "double"
-    ) / F.size(t).cast("double")
-    stop = F.size(F.filter(t, lambda x: (x == "the") | (x == "a"))).cast(
-        "double"
-    ) / F.size(t).cast("double")
-    ttr = F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
-    mwl = n_nonspace.cast("double") / F.size(words).cast("double")
-    alpha = F.size(F.expr(r"filter(split(trim(text), '\\s+'), w -> w rlike '[a-zA-Z]')")).cast(
-        "double"
-    ) / F.size(words).cast("double")
-    fixed_logit = (
-        F.lit(_QC_B)
-        + F.lit(_QC_W_NTOK) * F.size(t)
-        + F.lit(_QC_W_MEANLEN) * mean_len
-        + F.lit(_QC_W_STOP) * stop
-        + F.lit(_QC_W_TTR) * ttr
-    )
+    cols, fixed_pass = _qct_feature_cols()
     feats = persist_barrier(
-        d.select(
-            "source",
-            (
-                F.least(F.size(t), F.lit(100)).cast("double")
-                / F.lit(100).cast("double")
-                - F.lit(0.5)
-            ).alias("x1"),
-            (
-                F.least(mean_len, F.lit(10).cast("double")) / F.lit(10).cast("double")
-                - F.lit(0.5)
-            ).alias("x2"),
-            (stop - F.lit(0.5)).alias("x3"),
-            (ttr - F.lit(0.5)).alias("x4"),
-            F.when(
-                (F.size(words) >= 50)
-                & (F.size(words) <= 100_000)
-                & (mwl >= F.lit(3).cast("double"))
-                & (mwl <= F.lit(10).cast("double"))
-                & (alpha > F.lit(0.8)),
-                F.lit(1.0),
-            ).otherwise(F.lit(0.0)).alias("y"),
-            (fixed_logit >= F.lit(0.0)).alias("fixed_pass"),
-        ),
-        "qct_feats",
+        d.select("source", *cols, fixed_pass), f"qct_feats:{sf_dir}"
     )
     ws: tuple = (0.0, 0.0, 0.0, 0.0, 0.0)  # (b, w1..w4), driver-held
     stage_vals = []
@@ -1219,9 +1202,7 @@ def _qct_run(spark: SparkSession, sf_dir: str):
         _dlit(ws[3]).alias("w3"),
         _dlit(ws[4]).alias("w4"),
     )
-    result = (feats, stage_rows, w_frame)
-    _QCT_MEMO[key] = result
-    return result
+    return feats, stage_rows, w_frame
 
 
 # NOTE (r15): a shared persisted scored-corpus frame for the three gate
@@ -1419,20 +1400,6 @@ def bpe_train_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# Session-scoped memo for the trained BPE loop: unlike the quality pair
-# (whose feats/aggs dedupe across queries via persist_barrier's
-# sameSemantics check), every _bpe_run_loop call builds fresh
-# localCheckpoint frames, so without a memo running bpe_train_loop then
-# bpe_vocab_apply pays the 8-merge loop twice. Keyed by (applicationId,
-# sf_dir) so a restarted session never sees stale checkpoint handles;
-# cleared by clear_barriers() so bench repeats stay cold.
-_BPE_LOOP_MEMO: dict = {}
-
-
-def _bpe_memo_clear() -> None:
-    _BPE_LOOP_MEMO.clear()
-
-
 # Adaptive strategy threshold (the CC_SMALL_GRAPH_EDGES precedent,
 # operators/dedup.py): at or below this many vocabulary entries the 8-merge
 # loop runs driver-local on the collected (token, n, s) table instead of as
@@ -1509,6 +1476,7 @@ def _bpe_driver_loop(spark: SparkSession, rows):
     return v, out_rows
 
 
+@session_memo
 def _bpe_run_loop(spark: SparkSession, sf_dir: str):
     """Run the {_BPE_LOOP_MERGES}-merge loop; return (final vocab frame
     with columns token/n/nb/s/na, per-merge stats frames). Shared by
@@ -1516,11 +1484,6 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
     apply query reuses the trained vocabulary instead of retraining)."""
     from datapipeline_ops_spark.operators import dedup as dedup_ops
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_LOOP_MEMO.get(key)
-    if hit is not None:
-        return hit
-    dedup_ops.register_clear_hook(_bpe_memo_clear)
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(
@@ -1545,14 +1508,12 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
     # either way).
     head = dedup_ops.collect_if_small(v, _BPE_DRIVER_VOCAB_CAP)
     if head is not None:
-        result = _bpe_driver_loop(
+        return _bpe_driver_loop(
             spark,
             list(zip(head.column("token").to_pylist(),
                      head.column("n").to_pylist(),
                      head.column("s").to_pylist())),
         )
-        _BPE_LOOP_MEMO[key] = result
-        return result
     pair_structs = F.expr(
         "transform(sequence(1, size(s) - 1),"
         " i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))"
@@ -1611,7 +1572,6 @@ def _bpe_run_loop(spark: SparkSession, sf_dir: str):
                 "vocab_words_changed",
             )
         )
-    _BPE_LOOP_MEMO[key] = (v, out_rows)
     return v, out_rows
 
 
@@ -2092,43 +2052,9 @@ def minibatch_sgd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datapipeline_ops_spark.operators.dedup import persist_barrier
 
     d = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    words = tokens(F.trim(F.col("text")))
-    n_nonspace = F.length(F.regexp_replace("text", r"\s", ""))
-    mean_len = F.aggregate(t, F.lit(0), lambda a, x: a + F.length(x)).cast(
-        "double"
-    ) / F.size(t).cast("double")
-    stop = F.size(F.filter(t, lambda x: (x == "the") | (x == "a"))).cast(
-        "double"
-    ) / F.size(t).cast("double")
-    ttr = F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
-    mwl = n_nonspace.cast("double") / F.size(words).cast("double")
-    alpha = F.size(
-        F.expr(r"filter(split(trim(text), '\\s+'), w -> w rlike '[a-zA-Z]')")
-    ).cast("double") / F.size(words).cast("double")
+    cols, _ = _qct_feature_cols()
     feats = persist_barrier(
-        d.select(
-            (F.col("doc_id") % _SGD_BATCHES).alias("batch"),
-            (
-                F.least(F.size(t), F.lit(100)).cast("double")
-                / F.lit(100).cast("double")
-                - F.lit(0.5)
-            ).alias("x1"),
-            (
-                F.least(mean_len, F.lit(10).cast("double")) / F.lit(10).cast("double")
-                - F.lit(0.5)
-            ).alias("x2"),
-            (stop - F.lit(0.5)).alias("x3"),
-            (ttr - F.lit(0.5)).alias("x4"),
-            F.when(
-                (F.size(words) >= 50)
-                & (F.size(words) <= 100_000)
-                & (mwl >= F.lit(3).cast("double"))
-                & (mwl <= F.lit(10).cast("double"))
-                & (alpha > F.lit(0.8)),
-                F.lit(1.0),
-            ).otherwise(F.lit(0.0)).alias("y"),
-        ),
+        d.select((F.col("doc_id") % _SGD_BATCHES).alias("batch"), *cols),
         "sgd_feats",
     )
     ws: tuple = (0.0, 0.0, 0.0, 0.0, 0.0)  # (b, w1..w4), driver-held

@@ -4,8 +4,7 @@ The driver generates TPC-H-ish parquet tables plus ``events`` (stream-shaped),
 ``documents`` (text corpus) and ``embeddings`` (vector table) at
 ``/root/testdata/sf*/`` (TESTDATA.md). All engine queries address tables
 through this loader so source handling is one place: parquet scan, explicit
-column pruning left to Catalyst, and optional temp-view registration for the
-SQL API.
+column pruning left to Catalyst.
 """
 
 from __future__ import annotations
@@ -106,12 +105,6 @@ def _normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every catalog table as a DataFrame (lazy — no scan happens here)."""
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view for spark.sql() queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -59,7 +59,7 @@ def _lineitem(rows):
 
 
 def _drained_docs(tmp_path):
-    from test_round15_opt import _write_docs
+    from test_training_loops import _write_docs
 
     # the vocab drains to single symbols before the merge budget: merges
     # past the drain publish zero rows in both loops

@@ -1,12 +1,87 @@
-"""Round-15 optimization tests: the driver-side Spark-round replica and the
-driver-local Lloyd loop's edge cases must be exact (the driver vs
+"""Driver-side training loops: the session memo that holds their trained
+state, the driver-side Spark-round replica, the driver-local Lloyd loop's
+edge cases, and the mini-batch SGD empty-batch carry-over (the driver vs
 distributed equivalence tests live in tests/test_adaptive_paths.py)."""
 
 import random
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
 
+from datapipeline_ops_spark.operators import dedup as dedup_ops
 from datapipeline_ops_spark.queries import kmeans_loop as km
+from datapipeline_ops_spark.queries import lm_quality
+
+
+def _session(app_id):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_session_memo_keys_and_clears(monkeypatch):
+    """One compute per (applicationId, sf_dir); another dir or app id
+    computes again; clear_barriers() empties every memo; cache_clear()
+    empties only its own. Runs no Spark job."""
+    assert all(
+        any(fn.cache_clear.__self__ is m for m in dedup_ops._MEMOS)
+        for fn in (lm_quality._qct_run, lm_quality._bpe_run_loop, km._km_run)
+    )
+    assert km._km_memo_clear == km._km_run.cache_clear
+    monkeypatch.setattr(dedup_ops, "_MEMOS", [])
+    monkeypatch.setattr(dedup_ops, "_BARRIERS", {})
+    calls = []
+
+    @dedup_ops.session_memo
+    def train(spark, sf_dir):
+        calls.append(("train", spark.sparkContext.applicationId, sf_dir))
+        return object()
+
+    @dedup_ops.session_memo
+    def fit(spark, sf_dir):
+        calls.append(("fit", spark.sparkContext.applicationId, sf_dir))
+        return object()
+
+    a, b = _session("app-1"), _session("app-2")
+    first = train(a, "d1")
+    assert train(a, "d1") is first and len(calls) == 1
+    assert train(a, "d2") is not first and len(calls) == 2
+    assert train(b, "d1") is not first and len(calls) == 3
+    assert train(_session("app-1"), "d1") is first and len(calls) == 3
+
+    fit(a, "d1")
+    train.cache_clear()
+    train(a, "d1")
+    fit(a, "d1")
+    assert calls[-1] == ("train", "app-1", "d1") and len(calls) == 5
+
+    dedup_ops.clear_barriers()
+    train(a, "d1")
+    fit(a, "d1")
+    assert calls[-2:] == [("train", "app-1", "d1"), ("fit", "app-1", "d1")]
+
+
+def test_qct_memo_keeps_each_datasets_feature_barrier(spark, sf_dir, tmp_path_factory):
+    """Alternating two datasets in one session: the memoized feature table
+    of the first must still be persisted after the second was trained
+    (a barrier site shared across datasets unpersisted it, and every
+    later consumer silently re-derived the features from parquet)."""
+    tmp_path = tmp_path_factory.mktemp("qct_other")
+    _write_docs(
+        tmp_path,
+        [
+            (1, "the quick brown fox jumps over a lazy dog", "web"),
+            (2, "a a the the compression is all you need", "books"),
+        ],
+    )
+    dedup_ops.clear_barriers()
+    try:
+        first = lm_quality._qct_run(spark, sf_dir)[0]
+        lm_quality._qct_run(spark, str(tmp_path))
+        again = lm_quality._qct_run(spark, sf_dir)[0]
+        assert again is first
+        level = again.storageLevel
+        assert level.useMemory or level.useDisk, level
+    finally:
+        dedup_ops.clear_barriers()
 
 
 def test_km_r6_matches_spark_round(spark):
@@ -61,12 +136,6 @@ def test_km_driver_lloyd_edge_cases(spark):
         assert n_moved == (0 if it == 0 else None)
 
 
-# ---------------------------------------------------------------------------
-# r14 ADVICE edge case: an SGD batch key with zero rows (the drained-vocab
-# and empty/one-edge graph cases are in tests/test_adaptive_paths.py).
-# ---------------------------------------------------------------------------
-
-
 def _write_docs(tmp_path, rows):
     import pyarrow as pa
 
@@ -90,8 +159,6 @@ def test_sgd_empty_batch_matches_oracle(spark, tmp_path_factory):
     """doc_ids {1,2,3} leave batch key 0 (doc_id % _SGD_BATCHES) with zero
     rows: the empty-batch weight carry-over branch must still match the
     DuckDB oracle exactly."""
-    from datapipeline_ops_spark.operators.dedup import clear_barriers
-    from datapipeline_ops_spark.queries import lm_quality
     from test_fuzz_oracle_parity import _run_pair
 
     assert lm_quality._SGD_BATCHES == 4
@@ -104,8 +171,6 @@ def test_sgd_empty_batch_matches_oracle(spark, tmp_path_factory):
             (3, "tiny", "code"),
         ],
     )
-    clear_barriers()
-    lm_quality._qct_memo_clear()
+    dedup_ops.clear_barriers()
     _run_pair(spark, tmp_path, ["minibatch_sgd_train"], ["documents"])
-    lm_quality._qct_memo_clear()
-    clear_barriers()
+    dedup_ops.clear_barriers()
